@@ -147,17 +147,33 @@ print(json.dumps(out))
 _AB_PASSES = 2  # interleaved passes per tree
 
 
+def _ab_worktree(repo: Path, ref: str, root: Path = Path("/tmp")) -> Path:
+    """Detached worktree of ``repo`` at the commit ``ref`` names NOW.
+
+    The path is keyed by ``ref``, so a reused worktree can hold an older
+    commit once a branch moves; it is checked out again when its HEAD
+    differs from the resolved SHA."""
+    import subprocess
+
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", *args], check=True, capture_output=True, text=True
+        ).stdout.strip()
+
+    sha = git("-C", str(repo), "rev-parse", "--verify", f"{ref}^{{commit}}")
+    wt = root / f"bench_ab_{ref.replace('/', '_')}"
+    if not wt.exists():
+        git("-C", str(repo), "worktree", "add", "--detach", str(wt), sha)
+    elif git("-C", str(wt), "rev-parse", "HEAD") != sha:
+        git("-C", str(wt), "checkout", "--detach", sha)
+    return wt
+
+
 def _ab_main(ref: str, names: list[str]) -> int:
     import subprocess
 
     sf_env = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    wt = Path("/tmp") / f"bench_ab_{ref.replace('/', '_')}"
-    if not wt.exists():
-        subprocess.run(
-            ["git", "-C", str(REPO), "worktree", "add", str(wt), ref],
-            check=True,
-            capture_output=True,
-        )
+    wt = _ab_worktree(REPO, ref)
 
     def one_pass(tree: Path) -> dict[str, float]:
         r = subprocess.run(

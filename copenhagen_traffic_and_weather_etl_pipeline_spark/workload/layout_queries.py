@@ -497,13 +497,17 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     sum (same identity with mv = count over (G, bal)) is exact;
 #   - the full joint follows by inclusion-exclusion (all integer).
 # Pairs require strict a.k < b.k, so row pairs SHARING a custkey must
-# come back out: they are enumerated exactly by a self-join restricted
-# to keys with >1 row — EMPTY on PK-clean data, so the subtree
-# processes zero rows; it exists so the rewrite is unconditionally
-# equivalent, not "equivalent when custkey is unique".
+# come back out. The same window identities one level deeper count
+# them: "ka" partitions by (block, k) and is subtracted from the A, M,
+# D and DM marginals; "ks" partitions by (block, k, seg) and is
+# subtracted from S, SM, DS and DSM (equal k implies equal k % 10, so
+# one level covers the M-keyed marginals too). On PK-clean data those
+# partitions are singletons and the corrections are 0; they exist so
+# the rewrite is unconditionally equivalent, not "equivalent when
+# custkey is unique".
 # Plan shape: ONE data exchange (repartition by block) serves every
-# window and the dup self-join — each clustering below is a superset
-# of (nat, band), and Spark's subset rule (HashPartitioning(e)
+# window, the ka/ks corrections included — each clustering below is a
+# superset of (nat, band), and Spark's subset rule (HashPartitioning(e)
 # satisfies ClusteredDistribution(c) when e ⊆ c) makes them all
 # exchange-free local sorts; the only other exchanges are the two
 # 1-row aggregates. The oracle keeps the pair join (DuckDB-cheap at

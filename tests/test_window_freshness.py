@@ -1,1026 +1,120 @@
-"""CI enforcement of the driver-window freshness policy.
+"""The driver window: the order in which ``__spark_entry__`` lists its
+entries. Entries whose defining workload module changed since the last
+verdict commit come first, the rest follow in registration order, so a
+check that samples only the first entries re-proves fresh edits first.
+The ordering is a pure function of the changed-path set; the git lookup
+is tested on its own, on temporary repositories. The order is only a
+hint: ``tests/test_constrained_gate.py`` proves every entry."""
 
-Every registry entry's correctness evidence is a green driver-gate row
-earned on some past round's tree. tools/window_freshness.json records,
-per entry, that round and the entry's definition hash AT that tree
-(fn source + oracle + imported engine-module sources — see
-tools/freshness.py). This test recomputes the hashes against the
-current tree and fails if any entry whose definition drifted since its
-evidence — or that has no evidence at all — is missing from
-``_DRIVER_WINDOW`` (the first 50 registry entries, which the driver
-re-proves next round).
-
-This automates what rounds 4-7 did by hand (ROUND7_NOTES.md §3) and
-closes the two observed blind spots: changes landed in the same round
-as a gate but after it ran, and operator-module changes invisible to a
-fn+oracle-only hash (the round-7 asof case).
-
-After a new CORRECTNESS_r*.json lands, refresh the baseline with
-``python tools/freshness.py --baseline`` (requires the round's tree to
-be committed so the per-round git worktrees resolve).
-"""
-
-from __future__ import annotations
-
-import json
+import subprocess
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO / "tools"))
+sys.path.insert(0, str(REPO))
 
-from freshness import compute_hashes, newest_green_rounds  # noqa: E402
-
+import __spark_entry__ as entrymod  # noqa: E402
 from copenhagen_traffic_and_weather_etl_pipeline_spark.workload import (  # noqa: E402
     REGISTRY,
-    _DRIVER_WINDOW,
-    _NEXT_WINDOW,
 )
 
-BASELINE = json.loads((REPO / "tools" / "window_freshness.json").read_text())
-# v1 (False) or v2 helper-closure (True) — current hashes must be
-# computed in the same mode the baseline was built with.
-HELPERS_MODE = BASELINE.get("__meta__", {}).get("helpers", False)
+LAYOUT = "copenhagen_traffic_and_weather_etl_pipeline_spark/workload/layout_queries.py"
+SKETCH = "copenhagen_traffic_and_weather_etl_pipeline_spark/workload/sketch_queries.py"
+VERDICT = "round 3: verdict/advice/correctness/bench"
 
 
-def test_window_shape():
-    assert len(_DRIVER_WINDOW) == 50, "driver checks exactly 50 entries"
-    assert len(set(_DRIVER_WINDOW)) == 50, "window has duplicates"
-    unknown = [n for n in _DRIVER_WINDOW + _NEXT_WINDOW if n not in REGISTRY]
-    assert not unknown, f"window names not in REGISTRY: {unknown}"
-    assert list(REGISTRY)[:50] == _DRIVER_WINDOW, (
-        "registry insertion order must put the window first — "
-        "_rotate_registry() not applied?"
-    )
-    assert not set(_DRIVER_WINDOW) & set(_NEXT_WINDOW)
+def _module_path(name: str) -> str:
+    return REGISTRY[name].fn.__module__.replace(".", "/") + ".py"
+
+
+def _git_repo(path: Path):
+    """Initialise a repository at ``path`` holding a.py, b.py and c.py;
+    return a ``git`` runner for it."""
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=path, check=True, capture_output=True,
+        )
+
+    git("init", "-q")
+    for f in ("a.py", "b.py", "c.py"):
+        (path / f).write_text(f"{f[0]} = 1\n")
+    git("add", "-A")
+    git("commit", "-q", "-m", "seed")
+    return git
+
+
+def _edit_and_commit(git, path: Path, name: str, message: str) -> None:
+    (path / name).write_text(f"# {message}\n")
+    git("add", "-A")
+    git("commit", "-q", "-m", message)
 
 
 def test_changed_or_unproven_entries_are_in_window():
-    current = compute_hashes(REPO, include_helpers=HELPERS_MODE)
-    needs_slot: dict[str, str] = {}
-    for name in REGISTRY:
-        rec = BASELINE.get(name)
-        if rec is None:
-            needs_slot[name] = "no green driver row recorded"
-        elif rec["hash"] is None:
-            needs_slot[name] = f"unresolvable at its green round r{rec['round']}"
-        elif rec["hash"] != current[name]:
-            needs_slot[name] = (
-                f"definition changed since its newest green row "
-                f"(r{rec['round']} @ {rec['rev']})"
-            )
-    missing = {n: why for n, why in needs_slot.items() if n not in set(_DRIVER_WINDOW)}
-    assert not missing, (
-        "entries with invalidated/absent driver evidence must be in "
-        f"_DRIVER_WINDOW for re-proof: {json.dumps(missing, indent=1)}"
-    )
+    """Entries from a changed module lead, in registration order."""
+    order = entrymod.entry_order(REGISTRY, {LAYOUT, SKETCH})
+    changed = [n for n in REGISTRY if _module_path(n) in {LAYOUT, SKETCH}]
+    assert len(changed) == 11
+    assert order[: len(changed)] == changed
+    assert order[len(changed):] == [n for n in REGISTRY if n not in changed]
 
 
-def test_baseline_rounds_match_correctness_artifacts():
-    """The checked-in baseline must agree with the CORRECTNESS_r*.json
-    ledger about each entry's newest green round — a stale baseline
-    (e.g. not regenerated after a new round's artifacts landed) would
-    silently weaken the drift check above.
-
-    Round-15 verdict item #1: when the staleness is attributable
-    SOLELY to uncommitted driver artifacts (the DESIGNED round-boundary
-    state — the ledger rebuild needs the round's commit for its
-    worktree, so it CANNOT have run yet), this is process sequencing,
-    not a regression, and the suite must not judge red for it: skip
-    with the full diagnosis (which names the one-command fix,
-    ``python tools/freshness.py --turnover``). Every other stale cause
-    — committed artifacts with a skipped rebuild — stays a hard fail."""
-    import pytest
-
-    from freshness import stale_ledger_diagnosis, uncommitted_driver_artifacts
-
-    newest = newest_green_rounds(REPO)
-    stale = {
-        n: (BASELINE.get(n, {}).get("round"), r)
-        for n, r in newest.items()
-        if n in REGISTRY and BASELINE.get(n, {}).get("round") != r
-    }
-    if stale:
-        msg = stale_ledger_diagnosis(stale, HELPERS_MODE, REPO)
-        if uncommitted_driver_artifacts(REPO):
-            pytest.skip(msg)
-        pytest.fail(msg)
+def test_empty_change_set_gives_registration_order():
+    assert entrymod.entry_order(REGISTRY, set()) == list(REGISTRY)
+    # Paths outside the workload modules move nothing.
+    assert entrymod.entry_order(REGISTRY, {"README.md"}) == list(REGISTRY)
 
 
-def test_stale_ledger_diagnosis_is_self_explaining(tmp_path):
-    """Round-10 verdict item: a red caused by the DESIGNED
-    round-boundary state (newest CORRECTNESS_r*.json not yet committed,
-    so the ledger rebuild cannot have run) must be impossible to
-    mistake for an engine regression — the failure text says so
-    explicitly and names the exact rebuild command. Once the artifacts
-    are committed, the plain stale message names the rebuild command in
-    the ledger's recorded hash mode."""
-    import subprocess
-
-    from freshness import stale_ledger_diagnosis
-
-    def git(*args):
-        subprocess.run(
-            ["git", *args], cwd=tmp_path, check=True, capture_output=True
-        )
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
-    git("add", "-A")
-    git("commit", "-qm", "round 1: verdict/advice/correctness/bench")
-
-    stale = {"q": (1, 2)}
-
-    # Untracked newest artifact → the designed round-boundary state.
-    (tmp_path / "CORRECTNESS_r02.json").write_text("{}")
-    msg = stale_ledger_diagnosis(stale, True, tmp_path)
-    assert "NOT an engine regression" in msg
-    assert "CORRECTNESS_r02.json" in msg
-    # Round-14 verdict item #2: the failure text names the ONE
-    # turnover command (not just the manual rebuild steps).
-    assert "python tools/freshness.py --turnover" in msg
-    assert "--baseline --helpers" in msg
-
-    # Committed artifacts but skipped rebuild → plain stale message,
-    # still pointing at the one command.
-    git("add", "-A")
-    git("commit", "-qm", "round 2: verdict/advice/correctness/bench")
-    msg2 = stale_ledger_diagnosis(stale, True, tmp_path)
-    assert "NOT an engine regression" not in msg2
-    assert "out of date" in msg2
-    assert "python tools/freshness.py --turnover" in msg2
-    assert "--baseline --helpers" in msg2
-
-    # v1 ledger mode → no --helpers in the rebuild command.
-    msg3 = stale_ledger_diagnosis(stale, False, tmp_path)
-    assert "--helpers" not in msg3
+def test_non_git_directory_gives_no_changed_paths(tmp_path):
+    assert entrymod.changed_paths(tmp_path) == set()
 
 
-def test_turnover_plan_decisions():
-    """The --turnover artifact-commit step: round inference from the
-    dirty set, nothing-to-do on a clean tree, and a hard refusal when
-    the round's driver subject already exists (a duplicate would be
-    silently ignored by the oldest-wins evidence-tree resolver)."""
-    import pytest
-
-    from freshness import _turnover_plan
-
-    log = "aaa1111 round 1: verdict/advice/correctness/bench\n"
-
-    # Clean tree → no commit planned.
-    assert _turnover_plan([], log, [1, 2]) == (None, None)
-
-    # Dirty CORRECTNESS names the round directly (newest wins).
-    rnd, subject = _turnover_plan(
-        ["CORRECTNESS_r02.json", "BENCH_r02.json", "VERDICT.md"], log, [1, 2]
-    )
-    assert rnd == 2
-    assert subject == "round 2: verdict/advice/correctness/bench"
-
-    # Dirty non-CORRECTNESS artifacts infer the round from disk.
-    rnd2, subject2 = _turnover_plan(["VERDICT.md", "ADVICE.md"], log, [1, 2])
-    assert (rnd2, subject2) == (2, "round 2: verdict/advice/correctness/bench")
-
-    # Duplicate driver subject → refuse, never a silent second commit.
-    with pytest.raises(SystemExit, match="already exists"):
-        _turnover_plan(["CORRECTNESS_r01.json"], log, [1])
-
-    # No round inferable at all → refuse with instructions.
-    with pytest.raises(SystemExit, match="no CORRECTNESS"):
-        _turnover_plan(["VERDICT.md"], log, [])
-
-
-def test_porcelain_z_parsing_handles_renames_and_special_paths():
-    """Round-15 advice: porcelain output must be parsed NUL-delimited —
-    line slicing mangles rename entries into bogus 'old -> new' paths
-    and chokes on git-quoted special characters (which -z never
-    emits)."""
-    from freshness import _parse_porcelain_z
-
-    out = "\0".join(
-        [
-            "?? CORRECTNESS_r16.json",
-            " M BENCH_r16.json",
-            "R  VERDICT.md",  # rename: next field is the SOURCE path
-            "VERDICT_old.md",
-            "A  name with spaces.md",
-            "",
-        ]
-    )
-    assert _parse_porcelain_z(out) == [
-        "CORRECTNESS_r16.json",
-        "BENCH_r16.json",
-        "VERDICT.md",
-        "name with spaces.md",
-    ]
+def test_round_revs_derived_from_git_log(tmp_path):
+    """The diff base is the NEWEST verdict commit in the log."""
+    git = _git_repo(tmp_path)
+    assert entrymod.changed_paths(tmp_path) == set()  # no verdict commit yet
+    git("commit", "-q", "--allow-empty", "-m", VERDICT)
+    _edit_and_commit(git, tmp_path, "a.py", "edit a")
+    assert entrymod.changed_paths(tmp_path) == {"a.py"}
+    git("commit", "-q", "--allow-empty", "-m",
+        "round 4: verdict/advice/correctness/bench")
+    _edit_and_commit(git, tmp_path, "b.py", "edit b")
+    assert entrymod.changed_paths(tmp_path) == {"b.py"}
 
 
 def test_designed_round_boundary_detection(tmp_path):
-    """Round-15 verdict item #1: the CI gate skips (not fails) exactly
-    when uncommitted CORRECTNESS artifacts exist — the state in which
-    the ledger rebuild CANNOT have run. Committed artifacts → empty
-    detection → the stale path stays a hard fail."""
-    import subprocess
-
-    from freshness import uncommitted_driver_artifacts
-
-    def git(*args):
-        subprocess.run(
-            ["git", *args], cwd=tmp_path, check=True, capture_output=True
-        )
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
-    (tmp_path / "BENCH_r01.json").write_text("{}")  # never a trigger
-    assert uncommitted_driver_artifacts(tmp_path) == ["CORRECTNESS_r01.json"]
-    git("add", "-A")
-    # Staged-but-uncommitted still counts: the worktree resolver needs
-    # a COMMIT for the round.
-    assert uncommitted_driver_artifacts(tmp_path) == ["CORRECTNESS_r01.json"]
-    git("commit", "-qm", "round 1: verdict/advice/correctness/bench")
-    assert uncommitted_driver_artifacts(tmp_path) == []
-
-
-def test_turnover_refuses_polluted_index(tmp_path, monkeypatch):
-    """Round-15 advice (medium): a previously-staged unrelated change
-    must never be absorbed into the round's evidence commit — turnover
-    refuses outright when the index is non-empty."""
-    import subprocess
-
-    import freshness
-    import pytest
-
-    def git(*args):
-        subprocess.run(
-            ["git", *args], cwd=tmp_path, check=True, capture_output=True
-        )
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    (tmp_path / "engine.py").write_text("x = 1\n")
-    git("add", "-A")
-    git("commit", "-qm", "base")
-    # Stage an unrelated engine edit, then drop a round artifact.
-    (tmp_path / "engine.py").write_text("x = 2\n")
-    git("add", "engine.py")
-    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
-    monkeypatch.setattr(freshness, "REPO", tmp_path)
-    with pytest.raises(SystemExit, match="staged changes"):
-        freshness.turnover()
-
-
-def test_import_resolution_covers_all_forms(tmp_path):
-    """The dependency extractor must resolve every Python import form —
-    a silently-ignored form would let engine drift pass the freshness
-    gate (round-8 review finding)."""
-    import ast
-
-    from freshness import PKG, _imports_in_nodes, _module_file
-
-    src = "\n".join(
-        [
-            "from ..operators.dedup import minhash_signature",   # rel dotted
-            "from ..plans import materialize_once",               # rel module
-            "from .. import schemas",                             # bare rel pkg
-            "from ._oracle_helpers import lloyd_iter_ctes",       # sibling
-            "from copenhagen_traffic_and_weather_etl_pipeline_spark.operators import flatten",
-            "from copenhagen_traffic_and_weather_etl_pipeline_spark import testdata",
-            "import copenhagen_traffic_and_weather_etl_pipeline_spark.sinks",
-            "import os",                                          # third-party: ignored
-            "from pyspark.sql import functions as F",             # third-party: ignored
-        ]
-    )
-    raw = _imports_in_nodes(ast.walk(ast.parse(src)), ["workload"])
-    # Imported NAMES that are functions (materialize_once, ...) are
-    # emitted as candidates and dropped by the same file-resolution
-    # filter the pipeline applies — assert on the resolved set.
-    pkg_root = REPO / PKG
-    got = {d for d in raw if _module_file(pkg_root, d)}
-    assert got == {
-        "operators.dedup",
-        "plans",
-        "schemas",
-        "workload._oracle_helpers",
-        "operators",           # the subpackage __init__
-        "operators.flatten",   # ...and the submodule actually imported
-        "testdata",
-        "sinks",
-    }
-
-
-def test_transitive_closure_reaches_indirect_engine_deps():
-    """operators/dedup.py imports from plans/ — an entry that imports
-    only operators.dedup must still hash plans' source (the round-7
-    asof-class blind spot the closure exists to cover). Workload
-    registry modules must stay excluded even when imported directly."""
-    from freshness import PKG, _transitive_deps
-
-    pkg_root = REPO / PKG
-    closure = _transitive_deps({"operators.dedup"}, pkg_root)
-    assert "operators.dedup" in closure
-    assert "plans" in closure, "indirect plans dep not reached"
-    assert not any(d == "workload" or d.startswith("workload.") for d in closure)
-
-    # A direct workload-module dep is dropped entirely (per-entry drift
-    # there is captured by fn source + materialized oracle instead).
-    assert _transitive_deps({"workload.extension_queries"}, pkg_root) == set()
-
-
-def _closure_for(entry):
-    import inspect
-
-    from freshness import PKG, _ModuleIndex, _helper_closure, _pkg_location
-
-    pkg_root = REPO / PKG
-    idx = _ModuleIndex(pkg_root)
-    spec = REGISTRY[entry]
-    src = inspect.getsource(spec.fn)
-    mf = Path(inspect.getsourcefile(spec.fn))
-    mod = ".".join(
-        mf.relative_to(pkg_root).with_suffix("").parts
-    ).removesuffix(".__init__")
-    parts, engine_deps = _helper_closure(
-        spec.fn.__name__, src, mod, _pkg_location(mf, pkg_root), idx
-    )
-    return {p.split("\x00")[0] for p in parts}, engine_deps
-
-
-def test_names_used_never_under_includes_vs_symtable():
-    """Oracle check of the scope analyzer against Python's own
-    ``symtable`` over the LIVE corpus: every registry entry fn source
-    and every helper segment of every workload module. A name symtable
-    says may read module level must appear in _names_used (or be an
-    import alias, which resolves through the overlay instead) —
-    under-inclusion is the failure mode that lets helper drift escape
-    the freshness gate, so this is the direction the gate cannot
-    afford. Over-inclusion is tolerated (it only costs window slots).
-    Round-9 passes 2-4 each found under-inclusions by hand-review;
-    this pins the whole corpus mechanically."""
-    import ast
-    import importlib
-    import inspect
-    import symtable
-
-    from freshness import PKG, _ModuleIndex, _names_used
-
-    def module_reads(src):
-        st = symtable.symtable(src, "<s>", "exec")
-        out = set()
-
-        def walk(t):
-            for sym in t.get_symbols():
-                if sym.is_referenced() and sym.is_global():
-                    out.add(sym.get_name())
-            for c in t.get_children():
-                walk(c)
-
-        walk(st)
-        return out
-
-    def imported_names(src):
-        out = set()
-        for n in ast.walk(ast.parse(src)):
-            if isinstance(n, (ast.Import, ast.ImportFrom)):
-                out.update(a.asname or a.name.split(".")[0] for a in n.names)
-        return out
-
-    pkg_root = REPO / PKG
-    idx = _ModuleIndex(pkg_root)
-    workload = importlib.import_module(f"{PKG}.workload")
-
-    srcs = {
-        f"fn:{name}": inspect.getsource(spec.fn)
-        for name, spec in workload.REGISTRY.items()
-    }
-    for f in sorted((pkg_root / "workload").glob("*.py")):
-        dotted = "workload" if f.name == "__init__.py" else f"workload.{f.stem}"
-        defs, _ = idx.get(dotted)
-        for n, (seg, _ln) in defs.items():
-            srcs[f"seg:{dotted}:{n}"] = seg
-
-    assert len(srcs) > 400, "corpus unexpectedly small — collection broke?"
-    under = {}
-    for key, src in srcs.items():
-        try:
-            ref = module_reads(src)
-        except SyntaxError:
-            continue
-        missing = ref - (_names_used(src) | imported_names(src))
-        if missing:
-            under[key] = sorted(missing)
-    assert not under, f"scope analyzer under-includes vs symtable: {under}"
-
-
-def test_helper_closure_resolves_constants_functions_and_reexports():
-    """v2 hash mode must reach: same-module constants, same-module
-    sibling query fns called directly, cross-module helpers imported
-    at module top level, fn-level imports from _oracle_helpers, and
-    the shared workload loader reached via `from . import load`."""
-    ks, _ = _closure_for("sessionize_events")
-    assert "workload.scale_queries:_SESSION_GAP_US" in ks  # same-module constant
-    assert "workload:load" in ks  # shared loader via `from . import load`
-    assert "workload:_resolve_sf_dir" in ks  # transitive through load
-
-    ks, _ = _closure_for("dedup_method_eval")
-    assert "workload.extension_queries:dedup_minhash_lsh" in ks  # direct sibling call
-    assert "workload.extension_queries:_words_col" in ks  # transitive helper
-
-    ks, _ = _closure_for("ivf_ann_search")
-    assert "workload._oracle_helpers:lloyd_iter_ctes" in ks  # fn-level import
-
-
-def test_helper_closure_collects_engine_deps_from_helper_bodies():
-    """Engine modules imported only INSIDE a reached helper's body must
-    surface as deps — v1's dep closure sees only the entry fn and the
-    module top level, so without this an edit to plans/ reached solely
-    through a helper (triangle queries via _materialized_edges) or to
-    testdata reached through load->_resolve_sf_dir would escape the v2
-    hash (round-9 review finding, confirmed live before the fix)."""
-    _, deps = _closure_for("triangle_count_coorder")
-    assert "plans" in deps, "plans import inside _materialized_edges missed"
-
-    _, deps = _closure_for("sessionize_events")
-    assert "testdata" in deps, "testdata import inside _resolve_sf_dir missed"
-
-
-def test_names_used_excludes_locally_bound_names():
-    """A local variable shadowing a module-level helper must not pull
-    that helper into the hash: any binding makes the name local to the
-    whole scope, so loads never read the module definition (round-9
-    review finding)."""
-    import textwrap
-
-    from freshness import _names_used
-
-    src = textwrap.dedent(
-        """
-        def q(spark, sf_dir):
-            prefix = 1          # shadows a module-level `prefix`
-            n = prefix + other  # `other` is a real module-level read
-            for item in rows:   # `item` bound, `rows` read
-                n += item
-            return n
-        """
-    )
-    got = _names_used(src)
-    assert "other" in got and "rows" in got
-    assert "prefix" not in got and "item" not in got and "n" not in got
-    assert "spark" not in got and "sf_dir" not in got  # params bound
-
-
-def test_names_used_is_scope_sensitive():
-    """A name bound only in a NESTED scope (lambda param, comprehension
-    target) must not suppress a genuine enclosing-scope read of a
-    module-level helper — the reviewer's live counterexample against
-    the flat-walk subtract (round-9 second-pass finding)."""
-    import textwrap
-
-    from freshness import _names_used
-
-    src = textwrap.dedent(
-        """
-        def q(spark, sf_dir):
-            parts = [w for w in words]
-            vals = sorted(rows, key=lambda t: t.ts)
-            return t(w)   # module-level t and w, despite inner binders
-        """
-    )
-    got = _names_used(src)
-    assert {"t", "w", "words", "rows", "sorted"} <= got
-    assert "parts" not in got and "vals" not in got
-
-    # global declaration: a module read even though assigned locally.
-    src2 = "def q():\n    global CFG\n    CFG = 1\n    return CFG\n"
-    assert "CFG" in _names_used(src2)
-
-    # decorator/default expressions evaluate in the enclosing scope.
-    src3 = "def q():\n    @deco\n    def inner(x=default_val):\n        return x\n    return inner\n"
-    got3 = _names_used(src3)
-    assert {"deco", "default_val"} <= got3 and "x" not in got3
-
-
-def test_names_used_class_scope_does_not_enclose_methods():
-    """`class Agg: helper = ...; def m(self): return helper()` reads
-    MODULE-level helper at runtime — class scopes do not enclose their
-    methods, so the class-attribute binding must not swallow the
-    method's free name (round-9 third-pass finding, confirmed live)."""
-    import textwrap
-
-    from freshness import _names_used
-
-    src = textwrap.dedent(
-        """
-        class Agg:
-            helper = staticmethod(something)
-
-            def m(self):
-                return helper()
-        """
-    )
-    got = _names_used(src)
-    assert "helper" in got
-    assert "staticmethod" in got and "something" in got
-
-
-def test_names_used_method_calling_same_named_module_fn():
-    """A method whose body calls a function with the METHOD'S OWN name
-    reads the module-level one (class attrs are invisible from method
-    bodies) — the throwaway binding of the method name must not
-    subtract it (round-9 fourth-pass finding, confirmed live)."""
-    import textwrap
-
-    from freshness import _names_used
-
-    src = textwrap.dedent(
-        """
-        class Agg:
-            def transform(self, df):
-                return transform(df)
-        """
-    )
-    assert "transform" in _names_used(src)
-
-
-def test_names_used_guarded_method_bypasses_class_attrs():
-    """A method defined under `if`/`try` inside a class body is still a
-    method: its free names bypass class-attribute bindings (round-9
-    fourth-pass finding, confirmed live)."""
-    import textwrap
-
-    from freshness import _names_used
-
-    src = textwrap.dedent(
-        """
-        class A:
-            helper = 1
-            if True:
-                def m(self):
-                    return helper()
-        """
-    )
-    assert "helper" in _names_used(src)
-
-
-def test_names_used_class_body_comprehension_bypasses_class_attrs():
-    """A comprehension in a class body is a FUNCTION scope: everything
-    but the first iterable skips the class scope, so `helper(v)` in the
-    elt reads the MODULE helper even when the class binds `helper` as an
-    attribute (round-10 ADVICE finding; symtable confirms). The first
-    iterable DOES evaluate in the class scope, so `rows` there resolves
-    to the class attribute and must stay subtracted. Lambdas nested in
-    the comprehension get the same bypass."""
-    import textwrap
-
-    from freshness import _names_used
-
-    src = textwrap.dedent(
-        """
-        class A:
-            helper = 1
-            rows = [1]
-            vals = [helper(v) for v in rows]
-        """
-    )
-    got = _names_used(src)
-    assert "helper" in got
-    assert "rows" not in got
-
-    src2 = textwrap.dedent(
-        """
-        class B:
-            scale = 2
-            fns = [lambda v: scale * v for _ in range(3)]
-        """
-    )
-    assert "scale" in _names_used(src2)
-
-    # Comprehension targets still bind inside their own scope, and a
-    # dict comprehension's key/value both bypass.
-    src3 = textwrap.dedent(
-        """
-        class C:
-            key_of = 1
-            val_of = 2
-            m = {key_of(x): val_of(x) for x in (1, 2)}
-        """
-    )
-    got3 = _names_used(src3)
-    assert {"key_of", "val_of"} <= got3
-    assert "x" not in got3
-
-
-def test_names_used_global_read_survives_nonlocal_in_middle_scope():
-    """inner's `global X` read is a module read even when a MIDDLE
-    scope declares X nonlocal — the up-channel must not be filtered by
-    enclosing nonlocal declarations (round-9 fourth-pass finding)."""
-    import textwrap
-
-    from freshness import _names_used
-
-    src = textwrap.dedent(
-        """
-        def outer():
-            X = 1
-            def mid():
-                nonlocal X
-                def inner():
-                    global X
-                    return X
-                return inner()
-            return mid()
-        """
-    )
-    assert "X" in _names_used(src)
-
-
-def test_names_used_nested_global_survives_enclosing_binding():
-    """`def q(): CFG = 1; def inner(): global CFG; return CFG` — inner
-    reads MODULE-level CFG; the enclosing local binding must not
-    subtract it (round-9 third-pass finding, confirmed live)."""
-    import textwrap
-
-    from freshness import _names_used
-
-    src = textwrap.dedent(
-        """
-        def q():
-            CFG = 1
-            def inner():
-                global CFG
-                return CFG
-            return inner()
-        """
-    )
-    assert "CFG" in _names_used(src)
-
-
-def test_bare_annotation_does_not_shadow_live_import(tmp_path):
-    """`from .sib import helper` followed by `helper: object` (no
-    value) binds nothing at runtime — resolution must follow the live
-    import, not hash the dead annotation text (round-9 third-pass
-    finding: a regression risk of the last-binding-wins rule)."""
-    import subprocess
-    import sys as _sys
-    import textwrap
-
-    pkg = tmp_path / "copenhagen_traffic_and_weather_etl_pipeline_spark"
-    (pkg / "workload").mkdir(parents=True)
-    (pkg / "__init__.py").write_text("")
-
-    def write(sibling_body: str) -> None:
-        (pkg / "workload" / "sib.py").write_text(
-            f"def helper():\n    return {sibling_body!r}\n"
-        )
-        (pkg / "workload" / "__init__.py").write_text(
-            textwrap.dedent(
-                """
-                from .sib import helper
-
-                REGISTRY = {}
-
-                class Spec:
-                    def __init__(self, fn):
-                        self.fn = fn
-                        self.oracle = "SELECT 1"
-
-                helper: object   # bare annotation: binds nothing
-
-                def q(spark, sf_dir):
-                    return helper()
-
-                REGISTRY["q"] = Spec(q)
-                """
-            )
-        )
-
-    def dump():
-        out = subprocess.run(
-            [_sys.executable, str(REPO / "tools" / "freshness.py"),
-             "--dump", "--repo", str(tmp_path), "--helpers"],
-            capture_output=True, text=True, check=True,
-        )
-        return json.loads(out.stdout)["q"]
-
-    write("sibling")
-    h0 = dump()
-    write("sibling-EDITED")
-    assert dump() != h0, (
-        "edit to the live import target did not flip the hash — the "
-        "bare annotation shadowed it"
-    )
-
-
-def test_module_index_segments_include_decorators():
-    """A reached sibling query fn's segment must include its
-    @register(...) decorator block — a behavior-wrapping decorator (or
-    the registered doc/oracle text) is part of the definition (round-9
-    second-pass finding: get_source_segment starts at the def line)."""
-    from freshness import PKG, _ModuleIndex
-
-    idx = _ModuleIndex(REPO / PKG)
-    defs, _ = idx.get("workload.extension_queries")
-    seg, _lineno = defs["dedup_minhash_lsh"]
-    # get_source_segment on a decorator expression omits the "@".
-    assert seg.lstrip().startswith("register(")
-    assert "def dedup_minhash_lsh" in seg
-
-
-def test_resolve_honors_module_binding_order(tmp_path):
-    """If a module imports a name and LATER defines it, the def is the
-    runtime binding — the v2 hash must flip on edits to the local def,
-    not the dead import target (round-9 second-pass finding)."""
-    import subprocess
-    import sys as _sys
-    import textwrap
-
-    pkg = tmp_path / "copenhagen_traffic_and_weather_etl_pipeline_spark"
-    (pkg / "workload").mkdir(parents=True)
-    (pkg / "__init__.py").write_text("")
-
-    def write(local_body: str, sibling_body: str) -> None:
-        (pkg / "workload" / "sib.py").write_text(
-            f"def helper():\n    return {sibling_body!r}\n"
-        )
-        (pkg / "workload" / "__init__.py").write_text(
-            textwrap.dedent(
-                f"""
-                from .sib import helper
-
-                REGISTRY = {{}}
-
-                class Spec:
-                    def __init__(self, fn):
-                        self.fn = fn
-                        self.oracle = "SELECT 1"
-
-                def helper():   # defined AFTER the import: runtime binding
-                    return {local_body!r}
-
-                def q(spark, sf_dir):
-                    return helper()
-
-                REGISTRY["q"] = Spec(q)
-                """
-            )
-        )
-
-    def dump():
-        out = subprocess.run(
-            [_sys.executable, str(REPO / "tools" / "freshness.py"),
-             "--dump", "--repo", str(tmp_path), "--helpers"],
-            capture_output=True, text=True, check=True,
-        )
-        return json.loads(out.stdout)["q"]
-
-    write("local", "sibling")
-    h0 = dump()
-    write("local-EDITED", "sibling")
-    assert dump() != h0, "edit to the live local def did not flip the hash"
-    write("local", "sibling-EDITED")
-    assert dump() == h0, "edit to the dead import target flipped the hash"
-
-
-def test_helper_closure_dual_resolution_of_one_name(tmp_path):
-    """The same name resolving to TWO different definitions (a sibling
-    import inside the entry fn vs the module's own top-level def used
-    by another helper) must include BOTH segments — dedup is keyed by
-    resolved target, not usage site (round-9 review finding)."""
-    import subprocess
-    import sys as _sys
-    import textwrap
-
-    pkg = tmp_path / "copenhagen_traffic_and_weather_etl_pipeline_spark"
-    (pkg / "workload").mkdir(parents=True)
-    (pkg / "__init__.py").write_text("")
-
-    def write_main(local_x: str, sibling_x: str) -> None:
-        (pkg / "workload" / "__init__.py").write_text(
-            textwrap.dedent(
-                f"""
-                REGISTRY = {{}}
-
-                class Spec:
-                    def __init__(self, fn):
-                        self.fn = fn
-                        self.oracle = "SELECT 1"
-
-                def X():
-                    return {local_x!r}
-
-                def B():
-                    return X()
-
-                def q(spark, sf_dir):
-                    from .sib import X
-                    return (X(), B())
-
-                REGISTRY["q"] = Spec(q)
-                """
-            )
-        )
-        (pkg / "workload" / "sib.py").write_text(
-            f"def X():\n    return {sibling_x!r}\n"
-        )
-
-    def dump():
-        out = subprocess.run(
-            [_sys.executable, str(REPO / "tools" / "freshness.py"),
-             "--dump", "--repo", str(tmp_path), "--helpers"],
-            capture_output=True, text=True, check=True,
-        )
-        return json.loads(out.stdout)["q"]
-
-    write_main("local", "sibling")
-    h0 = dump()
-    write_main("local-EDITED", "sibling")
-    h_local = dump()
-    write_main("local", "sibling-EDITED")
-    h_sib = dump()
-    assert h0 != h_local, "module-local X (used via helper B) not hashed"
-    assert h0 != h_sib, "sibling X (fn-level import) not hashed"
-
-
-def test_helpers_mode_hash_flips_on_helper_edit(tmp_path):
-    """End-to-end on a synthetic package: editing a module-level helper
-    CONSTANT used by the entry fn flips the v2 hash and leaves the v1
-    hash unchanged (the exact blind spot v2 exists to close)."""
-    import subprocess
-    import sys as _sys
-    import textwrap
-
-    pkg = tmp_path / "copenhagen_traffic_and_weather_etl_pipeline_spark"
-    (pkg / "workload").mkdir(parents=True)
-    (pkg / "__init__.py").write_text("")
-
-    def write_workload(gap: int) -> None:
-        (pkg / "workload" / "__init__.py").write_text(
-            textwrap.dedent(
-                f"""
-                REGISTRY = {{}}
-
-                class Spec:
-                    def __init__(self, fn):
-                        self.fn = fn
-                        self.oracle = "SELECT 1"
-
-                _GAP = {gap}
-
-                def q(spark, sf_dir):
-                    return _GAP
-
-                REGISTRY["q"] = Spec(q)
-                """
-            )
-        )
-
-    def dump(helpers: bool):
-        cmd = [_sys.executable, str(REPO / "tools" / "freshness.py"),
-               "--dump", "--repo", str(tmp_path)]
-        if helpers:
-            cmd.append("--helpers")
-        out = subprocess.run(cmd, capture_output=True, text=True, check=True)
-        return json.loads(out.stdout)["q"]
-
-    write_workload(30)
-    v1_a, v2_a = dump(False), dump(True)
-    write_workload(60)
-    v1_b, v2_b = dump(False), dump(True)
-    assert v1_a == v1_b, "v1 must NOT see the helper-constant edit"
-    assert v2_a != v2_b, "v2 must flip on the helper-constant edit"
-
-
-def test_round_revs_derived_from_git_log():
-    """Round→rev resolution is derived from the exact `round N:
-    verdict/advice/correctness/bench` commit subjects (round-8 ADVICE:
-    no manual ROUND_REVS edit per round). Only the exact subject
-    matches — a later 'round N: verdict errata' must NOT re-pin the
-    round — and with duplicates the OLDEST wins (the gate ran against
-    the tree the round's first verdict commit sits on). ROUND_REVS
-    stays the explicit override."""
-    from freshness import _parse_round_revs, round_revs
-
-    log = "\n".join(
-        [
-            # git log is newest-first; the oldest round-9 commit is last.
-            "bbb2222 round 9: verdict/advice/correctness/bench",
-            "ccc3333 round 9: verdict errata — must not match at all",
-            "ddd4444 round 9: end-of-round snapshot (ignored)",
-            "eee5555 Fix something round 2: not-at-start (ignored)",
-            "fff6666 round 8: verdict/advice/correctness/bench",
-            "aaa1111 round 9: verdict/advice/correctness/bench",
-        ]
-    )
-    assert _parse_round_revs(log) == {9: "aaa1111", 8: "fff6666"}
-
-    # Against the real repo log: every historical verdict commit
-    # resolves, and matches the hand-verified pins rounds 1-8 used.
-    # %h abbreviation length is config-dependent (core.abbrev), so
-    # compare by mutual prefix rather than exact 7-char equality.
-    def same(a: str, b: str) -> bool:
-        return a.startswith(b) or b.startswith(a)
-
-    revs = round_revs()
-    assert same(revs[1], "634b8d0") and same(revs[5], "f0491d0")
-    assert same(revs[7], "6609c87") and same(revs[8], "11b1cdb")
-
-
-def test_compute_hashes_refuses_mixed_trees(tmp_path):
-    """With the package already imported (as in this process),
-    compute_hashes for a DIFFERENT tree must refuse rather than hash
-    fn sources from the import and dep sources from the argument
-    (round-8 ADVICE)."""
-    import pytest
-
-    from freshness import compute_hashes
-
-    (tmp_path / "copenhagen_traffic_and_weather_etl_pipeline_spark").mkdir()
-    with pytest.raises(RuntimeError, match="already imported"):
-        compute_hashes(tmp_path)
-
-
-def test_module_level_imports_include_guarded_blocks(tmp_path):
-    """Imports under top-level try:/if: count as module-level for the
-    freshness hash; imports inside functions/classes do not (round-8
-    ADVICE: tree.body alone was blind to guarded imports)."""
-    import ast
-    import textwrap
-
-    from freshness import _imports_in_nodes, _module_level_nodes
-
-    src = textwrap.dedent(
-        """
-        try:
-            from ..operators import flatten
-        except ImportError:
-            from ..operators import dedup
-        if True:
-            with open("x") as f:
-                from ..plans import materialize_once
-        def fn():
-            from ..schemas import TRAFFIC_SCHEMA  # per-entry, not module
-        class C:
-            from ..sinks import append_sink  # class body: excluded
-        """
-    )
-    got = _imports_in_nodes(_module_level_nodes(ast.parse(src)), ["workload"])
-    assert "operators.flatten" in got and "operators.dedup" in got
-    assert "plans" in got
-    assert not any("schemas" in d for d in got)
-    assert not any("sinks" in d for d in got)
-
-
-def test_hash_flips_on_dep_module_edit(tmp_path, monkeypatch):
-    """End-to-end on a synthetic package: editing a transitively-
-    imported engine module must flip an entry's hash even when the
-    entry's own source and direct import are untouched."""
-    import json
-    import subprocess
-    import sys as _sys
-    import textwrap
-
-    pkg = tmp_path / "copenhagen_traffic_and_weather_etl_pipeline_spark"
-    (pkg / "workload").mkdir(parents=True)
-    (pkg / "operators").mkdir()
-    (pkg / "__init__.py").write_text("")
-    (pkg / "plans.py").write_text("def helper():\n    return 1\n")
-    (pkg / "operators" / "__init__.py").write_text("")
-    (pkg / "operators" / "op.py").write_text(
-        "from ..plans import helper\n\ndef run():\n    return helper()\n"
-    )
-    (pkg / "workload" / "__init__.py").write_text(
-        textwrap.dedent(
-            """
-            REGISTRY = {}
-
-            class Spec:
-                def __init__(self, fn):
-                    self.fn = fn
-                    self.oracle = "SELECT 1"
-
-            def q(spark, sf_dir):
-                from ..operators.op import run
-                return run()
-
-            REGISTRY["q"] = Spec(q)
-            """
-        )
-    )
-
-    def dump():
-        out = subprocess.run(
-            [_sys.executable, str(REPO / "tools" / "freshness.py"),
-             "--dump", "--repo", str(tmp_path)],
-            capture_output=True, text=True, check=True,
-        )
-        return json.loads(out.stdout)
-
-    h1 = dump()["q"]
-    # Edit the INDIRECT dep only.
-    (pkg / "plans.py").write_text("def helper():\n    return 2\n")
-    h2 = dump()["q"]
-    assert h1 != h2, "indirect engine-module edit did not flip the hash"
+    """Only an exact verdict SUBJECT is a round boundary: neither a
+    longer subject nor the verdict line in a message body re-pins it."""
+    git = _git_repo(tmp_path)
+    git("commit", "-q", "--allow-empty", "-m", VERDICT)
+    _edit_and_commit(git, tmp_path, "a.py", "round 4: verdict errata")
+    _edit_and_commit(git, tmp_path, "b.py",
+                     "PR 5: round 5: verdict/advice/correctness/bench")
+    _edit_and_commit(git, tmp_path, "c.py",
+                     "edit c\n\nround 6: verdict/advice/correctness/bench")
+    assert entrymod.changed_paths(tmp_path) == {"a.py", "b.py", "c.py"}
+
+
+def test_porcelain_z_parsing_handles_renames_and_special_paths(tmp_path):
+    """A rename lists both paths; spaces, quotes and non-ASCII come back
+    verbatim, not git-quoted; working-tree edits count."""
+    git = _git_repo(tmp_path)
+    git("commit", "-q", "--allow-empty", "-m", VERDICT)
+    special = 'dir with space/café "q".py'
+    (tmp_path / "dir with space").mkdir()
+    git("mv", "a.py", special)
+    git("commit", "-q", "-m", "rename a")
+    (tmp_path / "b.py").write_text("b = 2\n")  # uncommitted
+    assert entrymod.changed_paths(tmp_path) == {"a.py", special, "b.py"}
+
+
+def test_window_shape(monkeypatch):
+    """``queries()`` lists every registry entry once, changed modules
+    first; ``oracle_sql()`` lists the same names in the same order."""
+    monkeypatch.setattr(entrymod, "changed_paths", lambda: {LAYOUT})
+    names = list(entrymod.queries())
+    oracles = list(entrymod.oracle_sql())
+    assert names[0] == next(n for n in REGISTRY if _module_path(n) == LAYOUT)
+    assert sorted(names) == sorted(REGISTRY)
+    assert [n for n in names if n in oracles] == oracles

@@ -112,7 +112,7 @@ def main() -> int:
     ap.add_argument(
         "--window",
         action="store_true",
-        help="check only the first 50 registry entries (the slice the "
+        help="check only the first 50 queries() entries (the slice the "
         "driver's per-round correctness gate sees)",
     )
     args = ap.parse_args()

@@ -42,9 +42,11 @@ Protocol:
   load-bearing rather than incidental);
 - default SF 0.1 (the bench SF: data comfortably exceeds what a 4 GiB
   heap could hold resident, so completion means streaming/bounded
-  working sets, not luck); CI runs the sf0.01 oracle variant on every
-  pytest run (tests/test_constrained_gate.py), and per-round
-  maintenance should run sf0.1 oracle plus sf1 completion.
+  working sets, not luck). Every pytest run executes two oracle
+  variants (tests/test_constrained_gate.py): the default set at sf0.01
+  and the whole registry at sf0.001 (``--full --sf 0.001``), which is
+  what proves every entry on every change. Per-round maintenance
+  should run sf0.1 oracle plus sf1 completion.
 
 Usage:
     python tools/constrained_gate.py                  # default set, sf0.1, 4g
